@@ -37,7 +37,7 @@ full series is emitted, so a mid-run load window (r10: 37 queries inflated
 self-adjudicates instead of costing a judge session.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS   (default 32).
+     SPARK_GRAFT_CPUS   (default: the CPUs this process may run on).
 """
 
 from __future__ import annotations
@@ -51,7 +51,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
 # Headline set: every operator class, excluding only the O(n^2) brute-force
 # variants (ngram_jaccard, embedding_dups) whose LSH/banded counterparts

@@ -793,6 +793,13 @@ def arpa_score(
     immediately anyway, so eagerness costs nothing extra."""
     if oov_mode not in ("keep", "unk"):
         raise ValueError(f"arpa_score: unknown oov_mode {oov_mode!r}")
+    # The probe below reads w1: check the word columns first, so a frame
+    # without them gets this error rather than an AnalysisException.
+    wcols = _word_cols(rows)
+    if not wcols:
+        raise ValueError(
+            f"arpa_score: needs word columns w1..wN; rows frame carries {wcols}"
+        )
     rows = rows.localCheckpoint(eager=True)
     if pins is not None:
         pins.append(rows)
@@ -818,7 +825,6 @@ def arpa_score(
             f"arpa_score: max_order={mo} but the model lists orders "
             f"1..{max(orders)}"
         )
-    wcols = _word_cols(rows)
     if mo > len(wcols):
         raise ValueError(
             f"arpa_score: max_order={mo} needs word columns w1..w{mo}; "

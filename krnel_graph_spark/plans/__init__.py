@@ -5,6 +5,7 @@ from .op_spec import (
     OpSpec,
     UUIDMismatchError,
     deserialize_graph,
+    load_graph,
     op_class,
     serialize_graph,
 )
@@ -20,6 +21,7 @@ __all__ = [
     "OpSpec",
     "UUIDMismatchError",
     "deserialize_graph",
+    "load_graph",
     "op_class",
     "serialize_graph",
     "graph_substitute",

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from typing import Any, Iterable, Iterator
+from typing import Any, Callable, Iterable, Iterator, Optional
 
 from pydantic import BaseModel, ConfigDict
 
@@ -226,8 +226,10 @@ class OpSpec(BaseModel):
             payload[name] = self._encode_value(getattr(self, name))
         return payload
 
-    def to_graph(self) -> dict[str, Any]:
-        return serialize_graph([self])
+    def to_graph(
+        self, stored: Optional[Callable[["OpSpec"], bool]] = None
+    ) -> dict[str, Any]:
+        return serialize_graph([self], stored=stored)
 
     @classmethod
     def from_graph(cls, data: dict[str, Any]) -> "OpSpec":
@@ -296,18 +298,67 @@ def _contains_opspec(value: Any) -> bool:
 # ---------------------------------------------------------------------- #
 
 
-def serialize_graph(outputs: Iterable[OpSpec]) -> dict[str, Any]:
-    """``{"outputs": [uuid...], "nodes": {uuid: {"type": ..., fields...}}}``.
+def serialize_graph(
+    outputs: Iterable[OpSpec], stored: Optional[Callable[[OpSpec], bool]] = None
+) -> dict[str, Any]:
+    """``{"outputs": [uuid...], "nodes": {uuid: {"type": ..., fields...}},
+    "stored": [uuid...]}``.
 
     Shared subgraphs serialize once (nodes are keyed by content address).
     Parity: reference ``op_spec.py:701-735``.
+
+    With ``stored``, an upstream node for which it returns true is not
+    serialized: the walk stops there and lists its UUID under ``"stored"``.
+    Such a node lives in another record (see :func:`load_graph`).
     """
     outputs = list(outputs)
     nodes: dict[str, Any] = {}
-    for root in outputs:
-        for node in root.iter_graph():
-            nodes.setdefault(node.uuid, node._node_payload())
-    return {"outputs": [o.uuid for o in outputs], "nodes": nodes}
+    refs: set[str] = set()
+    pending = list(outputs)
+    while pending:
+        node = pending.pop()
+        if node.uuid in nodes:
+            continue
+        nodes[node.uuid] = node._node_payload()
+        for dep in node.get_dependencies():
+            if stored is not None and stored(dep):
+                refs.add(dep.uuid)
+            else:
+                pending.append(dep)
+    return {
+        "outputs": [o.uuid for o in outputs],
+        "nodes": nodes,
+        "stored": sorted(refs - nodes.keys()),
+    }
+
+
+def load_graph(output: str, fetch: Callable[[str], dict[str, Any]]) -> OpSpec:
+    """Rebuild node ``output`` from graphs kept one per stored op.
+
+    ``fetch(uuid)`` returns the graph recorded for a stored op: that op's
+    node, the upstream nodes not stored, and the stored ancestors' UUIDs
+    under ``"stored"`` (:func:`serialize_graph` with ``stored``). Each
+    listed ancestor's graph is fetched in turn and the nodes are merged.
+    A graph holding the whole upstream (as records written before this
+    layout do) lists none, and the nodes it holds need no further fetch.
+    :func:`deserialize_graph` then verifies the merged graph.
+    """
+    nodes: dict[str, Any] = {}
+    fetched: set[str] = set()
+    pending = [output]
+    while pending:
+        uid = pending.pop()
+        if uid in fetched or uid in nodes:
+            continue
+        fetched.add(uid)
+        graph = fetch(uid)
+        try:
+            for key, payload in graph["nodes"].items():
+                nodes.setdefault(key, payload)
+            pending.extend(graph.get("stored", ()))
+        except (KeyError, TypeError, AttributeError) as exc:
+            raise GraphError(f"Malformed graph payload for {uid}: {exc}") from exc
+    return deserialize_graph({"outputs": [output], "nodes": nodes})[0]
 
 
 def deserialize_graph(data: dict[str, Any]) -> list[OpSpec]:

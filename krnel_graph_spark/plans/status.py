@@ -1,10 +1,17 @@
 """Materialization status records.
 
-Each non-ephemeral op gets a small JSON status document in the result store,
-embedding the op's full serialized upstream graph so any process pointing at
-the same store can rehydrate the pipeline from a UUID alone (parity with the
-reference's ``runners/op_status.py:13-39`` and ``uuid_to_op`` rehydration,
-``local_arrow_runner.py:250-269``)."""
+Each non-ephemeral op gets a small JSON status document in the result store
+(parity with the reference's ``runners/op_status.py:13-39``). The record
+holds the op's own node, the upstream nodes the store does not hold
+(ephemeral ops and sources), and the UUIDs of its stored ancestors, whose
+own records hold their nodes. So each node is written once per store, and
+any process pointing at the same store can still rehydrate the pipeline
+from a UUID alone by following those UUIDs (``load_graph``; parity with the
+reference's ``uuid_to_op``, ``local_arrow_runner.py:250-269``).
+
+A completed parquet result also records its Spark schema
+(``StructType.jsonValue()``), so opening it from the store needs no
+footer-inference job."""
 
 from __future__ import annotations
 
@@ -34,7 +41,10 @@ class OpStatus(BaseModel):
     started_at: Optional[str] = None
     completed_at: Optional[str] = None
     error: Optional[str] = None
-    graph: Optional[dict[str, Any]] = None  # serialized upstream graph
+    # This op's node plus unstored upstream nodes; stored ancestors by UUID.
+    graph: Optional[dict[str, Any]] = None
+    # Spark schema of the stored parquet result (StructType JSON).
+    result_schema: Optional[dict[str, Any]] = None
 
     def to_json(self) -> str:
         return self.model_dump_json()

@@ -10,7 +10,9 @@ Execution model (Spark-first redesign of the reference's pull-based runner,
 * **Non-ephemeral ops are materialization barriers.** Their DataFrame is
   written once to a UUID-keyed parquet store and re-read lazily; any process
   sharing the store reuses results (content-addressed memoization — the one
-  optimizer feature Catalyst does not provide).
+  optimizer feature Catalyst does not provide). A barrier costs one write
+  job: the re-read, and any later store hit, opens the parquet with the
+  schema kept in the op's status record, so it launches no job.
 * **Stable row ids everywhere** (see ``plan.py``): assigned at scan from
   parquet ``_metadata.row_index``, carried through every op, used for
   alignment and canonical export order.
@@ -480,60 +482,69 @@ class SparkRunner(BaseRunner):
 
     def _compute(self, op: OpSpec):
         impl = self.dispatch(op)
-        persist = not op.is_ephemeral and self.store is not None
-        if persist:
-            log = get_logger("runners.spark").bind(
-                op=type(op).__name__, uuid=op.uuid
-            )
-            status = OpStatus(
-                uuid=op.uuid,
-                state=OpState.RUNNING,
-                started_at=utcnow(),
-                graph=op.to_graph(),
-            )
-            self.store.write_status(op.uuid, status.to_json())
-            log.info("materializing")
-            try:
-                plan = impl(self, op)
-                plan = self._persist(op, plan)
-            except Exception as exc:
-                status.state = OpState.FAILED
-                status.error = f"{type(exc).__name__}: {exc}"
-                status.completed_at = utcnow()
-                self.store.write_status(op.uuid, status.to_json())
-                log.error("failed", error=status.error)
-                raise
-            status.state = OpState.COMPLETED
+        if op.is_ephemeral or self.store is None:
+            return impl(self, op)
+        log = get_logger("runners.spark").bind(op=type(op).__name__, uuid=op.uuid)
+        status = OpStatus(
+            uuid=op.uuid,
+            state=OpState.RUNNING,
+            started_at=utcnow(),
+            graph=op.to_graph(stored=_is_stored),
+        )
+        self.store.write_status(op.uuid, status.to_json())
+        log.info("materializing")
+        try:
+            plan, status.result_schema = self._persist(op, impl(self, op))
+        except Exception as exc:
+            status.state = OpState.FAILED
+            status.error = f"{type(exc).__name__}: {exc}"
             status.completed_at = utcnow()
             self.store.write_status(op.uuid, status.to_json())
-            log.info("completed")
-            return plan
-        return impl(self, op)
+            log.error("failed", error=status.error)
+            raise
+        status.state = OpState.COMPLETED
+        status.completed_at = utcnow()
+        self.store.write_status(op.uuid, status.to_json())
+        self.store.mark_done(op.uuid)  # last: a crashed writer never looks done
+        log.info("completed")
+        return plan
 
     def _persist(self, op: OpSpec, plan):
-        """Write a computed non-ephemeral result to the store and return a
-        plan backed by the stored copy (the materialization barrier)."""
+        """Write a computed non-ephemeral result to the store. Returns the
+        plan backed by the stored copy (the materialization barrier) and
+        the parquet schema for the status record (None for artifacts)."""
         store = self.store
         if isinstance(plan, ArtifactPlan):
             if plan.kind == "pickle":
                 store.write_pickle(op.uuid, plan.payload)
             else:
                 store.write_json(op.uuid, plan.payload)
-            store.mark_done(op.uuid)
-            return plan
-        path = store.parquet_path(op.uuid)
+            return plan, None
         df = plan.df() if isinstance(plan, ColumnPlan) else plan.df
-        df.write.mode("overwrite").parquet(path)
-        store.mark_done(op.uuid)
-        return self._load_from_store(op, plan)
+        df.write.mode("overwrite").parquet(store.parquet_path(op.uuid))
+        schema = df.schema.jsonValue()
+        return self._open_parquet(op, schema, plan), schema
 
-    def _load_from_store(self, op: OpSpec, computed=None):
+    def _load_from_store(self, op: OpSpec):
         store = self.store
         if store.has_json(op.uuid):
             return ArtifactPlan(payload=store.read_json(op.uuid), kind="json")
         if store.has_pickle(op.uuid):
             return ArtifactPlan(payload=store.read_pickle(op.uuid), kind="pickle")
-        df = self.spark.read.parquet(store.parquet_path(op.uuid))
+        blob = store.read_status(op.uuid)
+        schema = OpStatus.from_json(blob).result_schema if blob else None
+        return self._open_parquet(op, schema)
+
+    def _open_parquet(self, op: OpSpec, schema, computed=None):
+        """Lazy read of a stored parquet result. With the recorded schema
+        the read launches no job. A record without one falls back to
+        Spark's footer inference: a store written before schemas were
+        recorded, or a concurrent writer's RUNNING record over a finished
+        result."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(schema))
+        df = reader.parquet(self.store.parquet_path(op.uuid))
         dense = computed.dense if computed is not None else False
         value_cols = [c for c in df.columns if c != ROW_ID]
         from ..types import ColumnType
@@ -577,19 +588,22 @@ class SparkRunner(BaseRunner):
 
     def uuid_to_op(self, uuid: str) -> OpSpec:
         """Rehydrate a full OpSpec graph from the store alone (parity:
-        ``local_arrow_runner.py:250-269``)."""
+        ``local_arrow_runner.py:250-269``), following each record's stored
+        ancestors to their own records."""
         if self.store is None:
             raise ValueError("uuid_to_op requires a persistent store")
-        blob = self.store.read_status(uuid)
-        if blob is None:
-            raise KeyError(f"No status record for {uuid}")
-        status = OpStatus.from_json(blob)
-        if not status.graph:
-            raise KeyError(f"Status for {uuid} has no embedded graph")
-        from ..plans.op_spec import deserialize_graph
+        from ..plans.op_spec import load_graph
 
-        roots = deserialize_graph(status.graph)
-        return roots[0]
+        def record_graph(uid: str) -> dict:
+            blob = self.store.read_status(uid)
+            if blob is None:
+                raise KeyError(f"No status record for {uid}")
+            graph = OpStatus.from_json(blob).graph
+            if not graph:
+                raise KeyError(f"Status for {uid} has no embedded graph")
+            return graph
+
+        return load_graph(uuid, record_graph)
 
     # ------------------------------------------------------------------ #
     # Exports (canonical order: sorted by __row_id)                        #
@@ -759,14 +773,17 @@ class SparkRunner(BaseRunner):
         probs = [i / n_part for i in range(1, n_part)]
         # Cast to double for approxQuantile; cut points need only be
         # monotonic, so the double rounding of >2^53 ids is harmless —
-        # comparisons below happen on exact longs.
-        bounds = sorted(
-            {
-                int(b)
-                for b in df.select(F.col(ROW_ID).cast("double").alias("__d"))
-                .approxQuantile("__d", probs, 1.0 / (4 * n_part))
-            }
-        )
+        # comparisons below happen on exact longs. One bucket needs no
+        # cut point (and approxQuantile fails on an empty list).
+        bounds: list[int] = []
+        if probs:
+            bounds = sorted(
+                {
+                    int(b)
+                    for b in df.select(F.col(ROW_ID).cast("double").alias("__d"))
+                    .approxQuantile("__d", probs, 1.0 / (4 * n_part))
+                }
+            )
         bucket = _bucket_of(F.col(ROW_ID), bounds)
         sizes = {
             int(row["__b"]): int(row["count"])
@@ -788,6 +805,15 @@ class SparkRunner(BaseRunner):
             .drop("__b")
         )
         return out, n_rows
+
+
+def _is_stored(op: OpSpec) -> bool:
+    """Whether a store-backed runner keeps ``op``'s result in the store:
+    every non-ephemeral op except sources, which are their own
+    materialization (see ``SparkRunner.plan``)."""
+    from ..operators.dataset_ops import LoadDatasetOp
+
+    return not op.is_ephemeral and not isinstance(op, LoadDatasetOp)
 
 
 def _bucket_of(col, bounds: list[int], lo: int = 0, hi: Optional[int] = None):

@@ -6,10 +6,15 @@ Layout (parity with the reference's store,
     {root}/{ClassName}/{hash}/result.parquet/   (a Spark parquet directory)
                                result.json
                                result.pickle
-                               status.json
+                               status.json       (OpStatus record)
                                done              (completion marker)
 
-The ``done`` marker is written last, so a crashed writer never looks
+``status.json`` holds the op's own node, the upstream nodes the store does
+not hold (ephemeral ops and sources) and the UUIDs of its stored
+ancestors, so each node is written once per store; a completed parquet
+result's record also holds the result's Spark schema, which lets a reader
+open it without a footer-inference job. The ``done`` marker is written
+last, after the completed status record, so a crashed writer never looks
 complete. Results written by one process are visible to any other process
 pointing at the same root — this is the engine's cross-run / cross-machine
 memoization layer (content-addressed keys make it safe).

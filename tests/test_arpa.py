@@ -340,6 +340,9 @@ def test_arpa_score_validation(spark):
         arpa_score(no_unk, df, "text", "doc_id")
     with pytest.raises(ValueError, match="max_order"):
         arpa_score(rows, df, "text", "doc_id", max_order=5)
+    no_words = rows.select("order", "log10_p", "log10_bow")
+    with pytest.raises(ValueError, match="rows frame carries"):
+        arpa_score(no_words, df, "text", "doc_id")
 
 
 def test_arpa_load_rejects_malformed(spark, tmp_path):

@@ -546,7 +546,7 @@ def test_stupid_backoff_fixed_filters_train_side_only(spark, entry):
 
     from krnel_graph_spark.functions.text import _sb_fused_grams
 
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
     fused_plan = (
         _sb_fused_grams(docs.filter(F.col("doc_id") % 5 == 0), "text")
         ._jdf.queryExecution()

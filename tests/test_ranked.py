@@ -81,3 +81,36 @@ def test_rank_zip_cross_dataset(lazy_runner, tmp_path):
     combined = ds1.col_score("x") + ds2.col_score("y")
     vals = lazy_runner.to_pandas(combined)["value"].tolist()
     assert vals == [float(i) + float(i) * 10 for i in range(500)]
+
+
+def test_take_and_positional_mask_at_one_core(spark, monkeypatch):
+    """With one default partition the rank needs a single bucket and no
+    quantile cut points; take and positional masks must match the
+    multi-bucket output."""
+    from pyspark import SparkContext
+
+    from krnel_graph_spark import SparkRunner
+
+    n = 60
+    values = {"a": list(range(n))}
+    flags = {"keep": [i % 3 != 1 for i in range(n)]}
+
+    def run():
+        runner = SparkRunner(spark=spark, store_path=None)
+        ds = runner.from_inline_dataset(values)
+        mask = runner.from_inline_dataset(flags).col_boolean("keep")
+        masked = ds.mask_rows(mask)  # positional: mask from another dataset
+        return (
+            runner.to_pandas(masked),
+            runner.to_pandas(masked.take(10, skip=2, offset=1)),
+        )
+
+    multi = run()
+    monkeypatch.setattr(
+        SparkContext, "defaultParallelism", property(lambda self: 1)
+    )
+    assert spark.sparkContext.defaultParallelism == 1
+    one = run()
+    for got, want in zip(one, multi):
+        assert got.equals(want)
+    assert one[1]["a"].tolist() == [i for i in range(n) if i % 3 != 1][1::2][:10]
